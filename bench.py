@@ -25,7 +25,8 @@ from ksql_spark.registry import all_specs
 #: is 1 (widest shuffle here is <=150k rows; task launch dominates), but the
 #: two queries whose REDUCE side does real per-row work (window sort+rank over
 #: 150k rows; 95k-group final hash agg) win ~30-40% from 4-way parallelism
-#: (in-process A/B, tools/bench_exp2.py). Cluster guidance stays cores*3/AQE.
+#: (in-process A/B, docs/BENCH_NOTES.md "Round 4"). Cluster guidance stays
+#: cores*3/AQE.
 BENCH_QUERIES = {
     "q_filter_count": 1,
     "q_groupby_agg": 1,
@@ -79,8 +80,9 @@ def wait_for_quiet() -> dict:
 
 #: Warm-up passes before timing (excluded per BASELINE.md §4). Two, not one:
 #: measured first-timed-run samples stay ~30% above steady state after a
-#: single pass (JIT tiers/codegen caches still filling — tools/bench_exp10
-#: run columns), and a second pass removes that tail from the median window.
+#: single pass (JIT tiers/codegen caches still filling — docs/BENCH_NOTES.md
+#: "Round 6: second warm-up pass"), and a second pass removes that tail from
+#: the median window.
 WARMUPS = int(os.environ.get("KSQL_BENCH_WARMUPS", "2"))
 
 
@@ -94,9 +96,9 @@ def main() -> None:
     # Static reader confs must be set before the session exists (get_spark
     # getOrCreate()s, so pass via builder env knobs): off-heap column vectors
     # + 16k reader batches cut the single-row-group parquet decode ~25% on
-    # every scan-bound query (in-process A/B, tools/bench_exp3.py). These are
-    # reader-level settings, not semantics; session.py keeps JVM defaults for
-    # the general engine posture.
+    # every scan-bound query (in-process A/B, docs/BENCH_NOTES.md "Round 4").
+    # These are reader-level settings, not semantics; session.py keeps JVM
+    # defaults for the general engine posture.
     from pyspark.sql import SparkSession
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Scaling contract (VERDICT r13 item 2): the per-query shuffle-partition

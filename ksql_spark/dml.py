@@ -64,13 +64,19 @@ def _partition_cols(spark: SparkSession, table: str) -> list[str]:
     return out
 
 
+_COW_TAG = _re.compile(r"__cow_[0-9a-f]{8}$")
+
+
 def _swap_snapshot(spark: SparkSession, table: str, new_df: DataFrame) -> None:
     """Write new_df beside the current location, repoint, drop the old dir.
     Partitioned tables keep their layout: the new snapshot is written
     partitionBy(...) and MSCK SYNC re-derives partition metadata under the
     new root (stale entries pointing into the old root are dropped)."""
     old = _table_location(spark, table)
-    new = old.with_name(f"{old.name}__cow_{uuid.uuid4().hex[:8]}")
+    # Replace the previous write's tag rather than appending to it, so the
+    # directory name stays the same length however many writes a table takes.
+    base = _COW_TAG.sub("", old.name)
+    new = old.with_name(f"{base}__cow_{uuid.uuid4().hex[:8]}")
     pcols = _partition_cols(spark, table)
     writer = new_df.write.mode("overwrite")
     if pcols:

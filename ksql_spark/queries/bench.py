@@ -9,10 +9,10 @@ Builders are single plain-string `spark.sql()` calls over temp views kept
 current by tables.ensure_views (re-registered only when sf_dir changes): one
 py4j round-trip with NO plan serialization. Measured per-call build cost:
 plain-SQL-on-views ~21 ms vs DataFrame-template ~36 ms vs per-Column chatter
-~50-120 ms (tools/bench_exp3.py) — pure driver-side overhead the oracle
-engine does not pay. A view resolves at analysis time, so a built DataFrame
-is immune to later re-registration. Semantics and plan shape are identical
-to the Column form (same aliases, same dsum scaled-long spelling).
+~50-120 ms (docs/BENCH_NOTES.md "Round 4") — pure Python-side overhead the
+oracle engine does not pay. A view resolves at analysis time, so a built
+DataFrame is immune to later re-registration. Semantics and plan shape are
+identical to the Column form (same aliases, same dsum scaled-long spelling).
 """
 
 from __future__ import annotations

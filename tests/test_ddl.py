@@ -91,6 +91,22 @@ def test_dml_snapshot_swap_cleans_old_dir(spark, warehouse_table, tmp_path):
     assert spark.sql(f"SELECT count(*) c FROM {t}").collect()[0].c == 1
 
 
+def test_repeated_updates_keep_location_name_length(spark, warehouse_table):
+    # each copy-on-write swap renames the table directory; past ~18 writes an
+    # appended tag would exceed NAME_MAX (255)
+    from ksql_spark.dml import _table_location, update_table
+
+    t = warehouse_table
+    spark.sql(f"INSERT INTO {t} VALUES (1, 'a', 0.5), (2, 'b', 1.5)")
+    update_table(spark, t, {"score": "score + 1"}, where="id = 1")
+    first = _table_location(spark, t).name
+    for _ in range(39):
+        update_table(spark, t, {"score": "score + 1"}, where="id = 1")
+        assert len(_table_location(spark, t).name) == len(first)
+    rows = sorted(tuple(r) for r in spark.sql(f"SELECT * FROM {t}").collect())
+    assert rows == [(1, "a", 40.5), (2, "b", 1.5)]
+
+
 def test_run_dml_update_statement(spark, warehouse_table):
     from ksql_spark.dml import run_dml
 

@@ -1,96 +1,72 @@
-"""Driver-window rotation invariants (the VERDICT r5/r6 ritual, as a test).
+"""Check-window rotation invariants.
 
-The driver samples the FIRST 50 registry keys each round; ksql_spark.registry
-orders keys so never-driver-checked entries sort first. Two things can rot:
-a _RN_CHECKED transcription drifting from its CORRECTNESS_r0N.json, and a
-checked key leaking back into the front window. Both are asserted here.
-
-Deliberately only rounds the registry KNOWS (its _RN_CHECKED sets) are
-pinned: when a new CORRECTNESS file lands, this test stays green until the
-round ritual adds the matching frozenset — at which point the transcription
-is verified automatically.
+Each round's oracle check runs the FIRST 50 registry keys and records them in
+CORRECTNESS_rNN.json. ksql_spark.registry derives its order from those files:
+never-checked keys first, then keys by the round that last checked them.
+These tests read every CORRECTNESS file independently and assert the window
+that order produces.
 """
 
 from __future__ import annotations
 
 import json
+import re
 from pathlib import Path
 
-from ksql_spark import registry
 from ksql_spark.registry import all_specs
 
 REPO = Path(__file__).resolve().parents[1]
+WINDOW = 50
 
 
-def _known_rounds():
+def _rounds() -> dict[int, set[str]]:
     out = {}
-    for n in range(1, 50):
-        name = f"_R{n}_CHECKED"
-        if hasattr(registry, name):
-            out[n] = getattr(registry, name)
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            out[int(m.group(1))] = set(json.loads(path.read_text()))
     return out
 
 
-def test_checked_sets_transcribe_correctness_files():
-    for n, keys in _known_rounds().items():
-        path = REPO / f"CORRECTNESS_r{n:02d}.json"
-        if not path.exists():
-            continue
-        recorded = set(json.loads(path.read_text()))
-        # the frozenset must cover the file exactly: a missing key would
-        # wrongly re-prioritize it; an extra key would wrongly demote it.
-        assert keys >= recorded, (n, sorted(recorded - keys))
-        extra = keys - recorded
-        # keys checked in MULTIPLE rounds may appear in several sets; an
-        # extra key is only legal if some round's file really contains it
-        all_recorded = set()
-        for m in range(1, 50):
-            p = REPO / f"CORRECTNESS_r{m:02d}.json"
-            if p.exists():
-                all_recorded |= set(json.loads(p.read_text()))
-        assert extra <= all_recorded, (n, sorted(extra - all_recorded))
+def _last_round() -> dict[str, int]:
+    last = {}
+    for n, keys in _rounds().items():
+        for k in keys:
+            last[k] = max(last.get(k, 0), n)
+    return last
 
 
 def test_driver_window_fronts_all_unchecked_keys():
-    """Every never-driver-checked key must sit inside the 50-key window.
-
-    While the backlog exceeds the window, the whole window must be
-    unchecked keys. Once the backlog fits (r8+: 37 keys), the remaining
-    slots legitimately refill with the OLDEST-round re-verification keys
-    (VERDICT r7 item 1) — so assert containment, not exclusivity, plus
-    that any refill keys come from the oldest checked round present.
+    """Never-checked keys fill the window first. Once they fit, the refill
+    slots must re-verify the stalest evidence: every checked key inside the
+    window was last checked no later than any checked key left outside it.
     """
-    rounds = _known_rounds()
-    checked = set()
-    for keys in rounds.values():
-        checked |= keys
+    last = _last_round()
     order = list(all_specs())
-    unchecked = [k for k in order if k not in checked]
-    window = order[:50]
-    missing = [k for k in unchecked if k not in window] if len(unchecked) <= 50 else []
-    assert not missing, missing
-    if len(unchecked) > 50:
-        leaked = [k for k in window if k in checked]
+    unchecked = [k for k in order if k not in last]
+    window, outside = order[:WINDOW], order[WINDOW:]
+    if len(unchecked) > WINDOW:
+        leaked = [k for k in window if k in last]
         assert not leaked, leaked
-    else:
-        # Refill slots must re-verify the stalest evidence first: every
-        # checked key inside the window must have been last driver-sampled
-        # no later than any checked key left outside it. The stale-oracle
-        # re-verify tier (rows-only rows predating their oracles) is exempt —
-        # it deliberately fronts regardless of round.
-        last = {}
-        for n, keys in rounds.items():
-            for k in keys:
-                last[k] = max(last.get(k, 0), n)
-        stale_tier = getattr(registry, "_STALE_ORACLE_REVERIFY", frozenset())
-        refill = [k for k in window if k in checked and k not in stale_tier]
-        outside = [k for k in order[50:] if k in checked and k not in stale_tier]
-        if refill and outside:
-            newest_in = max(last[k] for k in refill)
-            oldest_out = min(last[k] for k in outside)
-            too_new = [k for k in refill if last[k] > oldest_out]
-            assert newest_in <= oldest_out, (
-                "window refill skipped staler keys",
-                too_new,
-                [k for k in outside if last[k] == oldest_out][:10],
-            )
+        return
+    missing = [k for k in unchecked if k not in window]
+    assert not missing, missing
+    refill = [k for k in window if k in last]
+    stale_out = [k for k in outside if k in last]
+    if refill and stale_out:
+        oldest_out = min(last[k] for k in stale_out)
+        too_new = [k for k in refill if last[k] > oldest_out]
+        assert not too_new, (
+            "window refill skipped staler keys",
+            too_new,
+            [k for k in stale_out if last[k] == oldest_out][:10],
+        )
+
+
+def test_latest_round_leaves_the_window():
+    """The keys the newest round just checked must not be checked again next
+    round while older evidence waits behind them."""
+    rounds = _rounds()
+    newest = rounds[max(rounds)]
+    repeated = sorted(newest & set(list(all_specs())[:WINDOW]))
+    assert not repeated, repeated
