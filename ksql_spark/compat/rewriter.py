@@ -85,24 +85,31 @@ class Rewriter:
 
     # -- schema walking -----------------------------------------------------
 
-    def _base_type(self, path: list[str]) -> tuple[str, DataType] | None:
+    def _base_type(
+        self, path: list[str], scope: frozenset[str]
+    ) -> tuple[str, DataType] | None:
         """Resolve the leading identifier path to (sql_prefix, datatype).
 
         Tries `view.column[.field…]` first, then bare `column[.field…]`
-        searched across all views (must be unambiguous).
+        searched across all views. When several views have it, only the
+        views named after FROM/JOIN in the statement (`scope`) count, as
+        AlaSQL resolves an unqualified column against its FROM clause; the
+        result must be unambiguous.
         """
         first = path[0].lower()
         if first in self.schemas and len(path) >= 2:
             dt = self._walk_struct(self.schemas[first], path[1:])
             if dt is not None:
                 return ".".join(path), dt
-        hits = []
-        for schema in self.schemas.values():
+        hits = {}
+        for view, schema in self.schemas.items():
             dt = self._walk_struct(schema, path)
             if dt is not None:
-                hits.append(dt)
+                hits[view] = dt
+        if len(hits) > 1:
+            hits = {v: dt for v, dt in hits.items() if v in scope} or hits
         if len(hits) == 1:
-            return ".".join(path), hits[0]
+            return ".".join(path), next(iter(hits.values()))
         if len(hits) > 1:
             raise RewriteError(f"ambiguous column path {'.'.join(path)!r}")
         # unknown first id → treat it as a table ALIAS: resolve the rest of the
@@ -141,9 +148,11 @@ class Rewriter:
 
     # -- chain rewriting ----------------------------------------------------
 
-    def _rewrite_chain(self, base_path: list[str], segments: list) -> tuple[str, DataType]:
+    def _rewrite_chain(
+        self, base_path: list[str], segments: list, scope: frozenset[str]
+    ) -> tuple[str, DataType]:
         """segments: list of ("key", name) | ("index", int)."""
-        resolved = self._base_type(base_path)
+        resolved = self._base_type(base_path, scope)
         if resolved is None:
             raise RewriteError(
                 f"cannot resolve {'.'.join(base_path)!r} against registered views "
@@ -185,6 +194,7 @@ class Rewriter:
 
     def rewrite(self, sql: str) -> str:
         toks = _tokenize(sql)
+        scope = _from_views(toks)
         out: list[str] = []
         i = 0
         n = len(toks)
@@ -243,7 +253,7 @@ class Rewriter:
                         )
                     k = peek_nonws(k_next)
                 try:
-                    expr, dt = self._rewrite_chain(path, segments)
+                    expr, dt = self._rewrite_chain(path, segments, scope)
                 except RewriteError:
                     # not a data path we know (e.g. a Spark SQL lambda `x -> x*2`,
                     # or a typo the engine will diagnose) → pass through verbatim
@@ -275,10 +285,32 @@ class Rewriter:
         return "".join(out)
 
 
+def _from_views(toks: list[_Tok]) -> frozenset[str]:
+    """Lower-cased identifiers that follow FROM or JOIN anywhere in the
+    statement: the views a bare column path may resolve against."""
+    names = set()
+    prev = ""
+    for t in toks:
+        if t.kind in ("ws", "comment"):
+            continue
+        if t.kind == "ident" and prev in ("FROM", "JOIN"):
+            names.add(t.text.lower())
+        prev = t.text.upper() if t.kind == "ident" else ""
+    return frozenset(names)
+
+
 def rewrite(sql: str, schemas: Mapping[str, StructType],
             truthiness_compat: bool = False) -> str:
     """One-shot convenience: rewrite `->` chains in `sql` against `schemas`."""
     return Rewriter(schemas, truthiness_compat=truthiness_compat).rewrite(sql)
+
+
+def compat_sql(rewriter: Rewriter, sql: str) -> str:
+    """The full reference-dialect rewrite of a query statement: `->` chains,
+    then `JOIN … USING col`, `SELECT TOP n` and `QUALIFY`. Every surface
+    that hands a query to spark.sql (REPL, `.explain`, COPY, HTTP `/api`
+    and `/explain`) goes through this one chain."""
+    return compat_qualify(compat_top(compat_using(rewriter.rewrite(sql))))
 
 
 def compat_top(sql: str) -> str:

@@ -17,8 +17,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 from urllib.parse import parse_qs, urlparse
 
-from ksql_spark.compat.rewriter import (Rewriter, compat_qualify, compat_top,
-                                         compat_using)
+from ksql_spark.compat.rewriter import Rewriter, compat_sql
 from ksql_spark.repl import build_session, make_rewriter
 
 MAX_ROWS = 10_000  # don't collect unbounded results into the driver
@@ -43,8 +42,7 @@ def run_query(
         if n is None:  # rewrite broke the statement shape — be loud
             raise ValueError("DML statement failed to parse after rewrite")
         return {"headers": ["rows_affected"], "data": [[n]]}
-    sql = compat_qualify(compat_top(compat_using(rewriter.rewrite(query))))
-    df = spark.sql(sql).limit(MAX_ROWS)
+    df = spark.sql(compat_sql(rewriter, query)).limit(MAX_ROWS)
     rows = df.collect()
     # positional access: Row[name] returns the FIRST field with that name, so
     # name-based lookup silently duplicates values when a join projects two
@@ -95,13 +93,8 @@ def make_handler(spark, rewriter: Rewriter, allow_dml: bool = False):
                     self.wfile.write(b"Query parameter is required.")
                     return
                 try:
-                    sql = compat_qualify(
-                        compat_top(
-                            compat_using(rewriter.rewrite(params["query"][0]))
-                        )
-                    )
                     plan = (
-                        spark.sql(sql)
+                        spark.sql(compat_sql(rewriter, params["query"][0]))
                         ._jdf.queryExecution()
                         .explainString(
                             spark._jvm.org.apache.spark.sql.execution

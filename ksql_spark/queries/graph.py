@@ -3,7 +3,8 @@
 AlaSQL 0.3's graph SEARCH operator is unused by the reference (SURVEY §2.L)
 but part of the delegated surface; the Spark-native mapping is iterative
 frontier expansion over DataFrame joins (the standard BFS / connected-
-components pattern — each level is one distinct-join, state stays distributed).
+components pattern — each level is one join + min re-aggregation in
+min_relax, state stays distributed).
 
 Oracle: DuckDB WITH RECURSIVE over the same adjacency — an exact, fully
 SQL-expressible check for an iterative algorithm.
@@ -11,7 +12,7 @@ SQL-expressible check for an iterative algorithm.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ksql_spark.operators.scale import fan_parts, is_pinned, pin, pin_invariant
 from ksql_spark.registry import query
@@ -97,6 +98,90 @@ def coship_adj(
     )
 
 
+def min_relax(
+    seeds: DataFrame,
+    adj: DataFrame,
+    keys: list[str],
+    weight: Column,
+    max_rounds: int,
+    broadcast: bool,
+) -> tuple[DataFrame, bool]:
+    """Min-plus label propagation from `seeds` until no value drops — the
+    one loop behind BFS, connected components, weighted SSSP and landmark
+    distances. Returns (state, converged).
+
+    `seeds` holds `keys` plus one value column. The last key is the node;
+    any others (a landmark id) ride along unchanged. Each round relaxes
+    the frontier along the adjacency's s1 → s2 edges, adding `weight` (a
+    Column over s1, s2 — it need not be symmetric), and keeps per key the
+    min of its own value and every candidate. After r rounds a value is
+    the least total weight over paths of at most r hops from a seed
+    (synchronous Bellman-Ford), which is the contract of the depth-capped
+    callers; `converged` is False when round `max_rounds` still changed
+    a value.
+
+    Frontier-only relaxation: values only ever decrease, and round k-1
+    already folded every round-k-2 value into its neighbours, so a row
+    that did not change in round k-1 cannot improve anything in round k.
+    Round 1 relaxes all seeds; later rounds relax only the changed rows.
+    Results and round counts equal relaxing the whole state every round,
+    while the join probe (and the broadcast side) shrinks with the
+    frontier instead of staying O(|V|).
+
+    `broadcast` hints the frontier side of the relax join. A pinned
+    frontier is an ExistingRDD whose stats never clear the auto-broadcast
+    threshold, so un-hinted the planner sort-merge-joins it with the
+    pinned adjacency and re-exchanges and re-sorts the |E|-row edge list
+    every round; the hint leaves the edge list where it sits. Connected
+    components passes False: broadcasting its frontier measured slower
+    (r14 interleaved A/B on the sf0.1 dedup pair graph: 5.2-6.1 s
+    shuffled, 7.5-8.3 s broadcast — the blocking per-round
+    BroadcastExchange build cost more than the skipped |E|-row exchange).
+    The broadcast side is still O(|V|) in the worst round.
+
+    Each round is ONE aggregation (candidate min and the key's own
+    previous value, NULL for a newly reached key) pinned lazily; the
+    changed-count is the round's one job and materializes the pin. That
+    single pass holds for the localCheckpoint path only: with
+    RELIABLE_PIN_CONF and a checkpoint dir set, checkpoint(eager=False)
+    recomputes the round in a separate write job after the count —
+    correct either way, two passes per round."""
+    *ride, node = keys
+    (value,) = [c for c in seeds.columns if c not in keys]
+    state = frontier = seeds
+    for _ in range(max_rounds):
+        src = frontier.withColumnRenamed(node, "s1")
+        relaxed = (F.broadcast(src) if broadcast else src).join(adj, "s1").select(
+            *ride,
+            F.col("s2").alias(node),
+            (F.col(value) + weight).alias(value),
+            F.lit(False).alias("_own"),
+        )
+        nxt = (
+            state.withColumn("_own", F.lit(True))
+            .unionByName(relaxed)
+            .groupBy(*keys)
+            .agg(
+                F.min(value).alias(value),
+                F.min(F.when(F.col("_own"), F.col(value))).alias("_prev"),
+            )
+            .select(
+                *keys,
+                value,
+                (
+                    F.col("_prev").isNull() | (F.col(value) < F.col("_prev"))
+                ).alias("_changed"),
+            )
+            .transform(pin, eager=False)
+        )
+        changed = nxt.where("_changed").limit(1).count()
+        state = nxt.drop("_changed")
+        if changed == 0:
+            return state, True
+        frontier = nxt.where("_changed").drop("_changed")
+    return state, False
+
+
 @query(
     "graph_bfs",
     oracle=f"""
@@ -119,10 +204,11 @@ def coship_adj(
 def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS over the 'suppliers who ship a common part' graph, depth <= 3.
 
-    The driver-side loop iterates over PLANS, not data: each level is
-    frontier ⋈ adjacency → distinct → anti-join visited. At 100 TB this is the
-    same shape large-scale connected-components/label-propagation jobs use;
-    state (visited set) lives in DataFrames, never in driver memory.
+    The driver-side loop iterates over PLANS, not data: each level relaxes
+    the newly reached nodes along the adjacency (min_relax with unit
+    weights). At 100 TB this is the same shape large-scale connected-
+    components/label-propagation jobs use; state lives in DataFrames,
+    never in driver memory.
     """
     li = load(spark, sf_dir, "lineitem")
     return bfs(spark, coship_adj(li, exclude_self=False), _START, _MAX_DEPTH)
@@ -161,7 +247,8 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def connected_components(adj: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Min-label propagation over an adjacency DataFrame (s1, s2; symmetric,
-    self-loops allowed) → (suppkey, component=min node id in component).
+    self-loops allowed) → (suppkey, component=min node id in component):
+    min_relax with zero weights, every node seeded with its own id.
 
     Raises RuntimeError if labels have not converged within max_rounds —
     returning partially-propagated labels would silently split one real
@@ -179,72 +266,20 @@ def connected_components(adj: DataFrame, max_rounds: int = 20) -> DataFrame:
         # reports UnknownPartitioning, so every round's neighbor join was
         # scanning the edge list quasi-serially (measured: ~5 s/round on
         # the 1M-edge co-ship graph at sf0.1).
-        adj = adj.repartition(fan_parts(adj.sparkSession), "s2")
+        adj = adj.repartition(fan_parts(adj.sparkSession), "s1")
     adj = pin_invariant(adj)
     labels = adj.select(F.col("s1").alias("suppkey")).distinct().withColumn(
         "component", F.col("suppkey")
     )
-    # r14 frontier shrink (VERDICT r13 item 4, guide §2.3 "shuffle fewer
-    # bytes"): a node's label is monotone non-increasing and round k-1
-    # already folded every neighbor's round-k-2 label into it, so a
-    # neighbor whose label did NOT change in round k-1 cannot improve any
-    # node in round k — only CHANGED labels need to re-join the adjacency.
-    # Round 1 treats every node as changed (no label has propagated yet).
-    # Output and convergence are identical; the per-round join probe (and
-    # its output feeding the re-agg exchange) shrinks with the frontier
-    # instead of staying O(|V|) for the whole run.
-    # (A per-round size-adaptive BROADCAST of the frontier was measured
-    # and rejected — r14, guide §1.1: interleaved three-way A/B on the
-    # sf0.1 dedup pair graph gave old 5.1-5.7 s, shrink-only 5.2-6.1 s,
-    # shrink+broadcast 7.5-8.3 s; the blocking per-round BroadcastExchange
-    # build costs more than the skipped |E|-row exchange at any frontier
-    # size this box can hold.)
-    frontier = labels
-    for _ in range(max_rounds):
-        # Fused round (r14): ONE aggregation computes both the candidate
-        # label (min over own ∪ neighbor labels) and the previous label
-        # (min over the single own row) — the former spelling re-joined
-        # labels after the neighbor-min agg, an extra stage per round.
-        # min(own ∪ neighbors) ≡ least(own, neighbor_min) and
-        # (new < own) ≡ (neighbor_min < own), so rounds and convergence
-        # are identical.
-        nbr = adj.join(frontier, adj.s2 == frontier.suppkey).select(
-            F.col("s1").alias("suppkey"),
-            "component",
-            F.lit(False).alias("own"),
-        )
-        nxt = (
-            labels.withColumn("own", F.lit(True))
-            .unionByName(nbr)
-            .groupBy("suppkey")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("own"), F.col("component"))).alias("own_c"),
-            )
-            .select(
-                "suppkey",
-                "component",
-                (F.col("component") < F.col("own_c")).alias("changed"),
-            )
-        ).transform(pin, eager=False)
-        # The changed-count below is the materializing action: it computes
-        # nxt (LocalRDDCheckpointData fills partitions the incremental
-        # execution skipped at job end), so one pass replaces the previous
-        # eager-checkpoint job + count job per round. That single-pass
-        # claim holds for the localCheckpoint path only (ADVICE r13): with
-        # RELIABLE_PIN_CONF + a checkpoint dir set, checkpoint(eager=False)
-        # recomputes the lineage in a separate checkpoint-write job after
-        # the count — correct either way, but reliable-pin deployments pay
-        # two passes per round here.
-        changed = nxt.where("changed").limit(1).count()
-        labels = nxt.drop("changed")
-        if changed == 0:
-            return labels
-        frontier = nxt.where("changed").drop("changed")
-    raise RuntimeError(
-        f"connected_components did not converge in {max_rounds} rounds "
-        "(graph diameter exceeds max_rounds); raise max_rounds"
+    labels, converged = min_relax(
+        labels, adj, ["suppkey"], F.lit(0), max_rounds, broadcast=False
     )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_rounds} rounds "
+            "(graph diameter exceeds max_rounds); raise max_rounds"
+        )
+    return labels
 
 
 def bfs(spark: SparkSession, adj: DataFrame, start: int, max_depth: int) -> DataFrame:
@@ -254,68 +289,10 @@ def bfs(spark: SparkSession, adj: DataFrame, start: int, max_depth: int) -> Data
     connected_components: one materialization instead of max_depth edge-build
     re-executions)."""
     start_df = spark.createDataFrame([(start, 0)], "suppkey long, depth int")
-    return bfs_frontier(pin_invariant(adj), start_df, max_depth)
-
-
-def _bfs_level(
-    frontier: DataFrame, visited: DataFrame, adj: DataFrame, d: int
-) -> DataFrame:
-    """One BFS level: frontier's neighbors, minus already-visited nodes.
-    Module-level so tools/probe_relax_plans.py dumps the EXACT executed
-    level plan as before/after evidence (the loop hides it behind pins).
-
-    r14 (the graph_sssp_weighted device, guide §3.1/§2.4): both the
-    frontier and the visited set are O(|V|)-row pinned tables the planner
-    sort-merge-joined against the |E|-row pinned adjacency resp. the
-    distinct output (ExistingRDD stats never clear the auto-broadcast
-    threshold), re-exchanging and re-sorting the edge list every level.
-    Broadcasting them leaves the edge list where it sits and turns the
-    anti-join into a BroadcastHashJoin LeftAnti; both levels already pay
-    per-level pins (the sssp-win posture). distinct/anti-join are set
-    operations — the result is bit-identical."""
-    return (
-        F.broadcast(frontier)
-        .join(adj, frontier.suppkey == adj.s1)
-        .select(F.col("s2").alias("suppkey"))
-        .distinct()
-        .join(F.broadcast(visited), "suppkey", "left_anti")
-        .withColumn("depth", F.lit(d))
-    )
-
-
-def bfs_frontier(adj: DataFrame, start_df: DataFrame, max_depth: int) -> DataFrame:
-    """BFS whose seed frontier is a DataFrame (suppkey, depth=0) rather than
-    a driver-side constant — the double-sweep diameter device needs the
-    second sweep to start from a node CHOSEN BY THE FIRST SWEEP'S PLAN
-    (TakeOrdered 1 row), and collecting it to the driver would launch the
-    whole first BFS at plan-build time (the eager-count anti-pattern the
-    graph_ppr ADVICE fix removed). Caller must pass an already-pinned
-    adjacency (bfs() does)."""
-    visited = start_df
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        nxt = _bfs_level(frontier, visited, adj, d)
-        if d < max_depth:
-            # truncate lineage per level — without this, frontier/visited plans
-            # nest exponentially (each level re-derives every prior level) and
-            # optimization time blows up past depth ~4
-            nxt = nxt.transform(pin, eager=False)
-            # Empty-frontier early exit (r14, the connected_components
-            # changed-count device): an empty frontier makes every deeper
-            # level empty, so `visited` is already final — identical
-            # output, and the remaining levels' join/distinct/anti-join
-            # stages never run. The co-ship graph's eccentricities are far
-            # below the depth cap (measured at sf0.1: ALL nodes at depth 1
-            # from the root, so 5 of each sweep's 6 levels were empty
-            # rounds costing ~0.7 s of stage scheduling each). The count
-            # doubles as the pin's materializing action (one job per
-            # executed level; the former spelling materialized the same
-            # pins inside the final action anyway).
-            if nxt.limit(1).count() == 0:
-                return visited
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+    return min_relax(
+        start_df, pin_invariant(adj), ["suppkey"], F.lit(1), max_depth,
+        broadcast=True,
+    )[0]
 
 
 _PR_ITERS = 3
@@ -606,56 +583,20 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; 4 rounds = paths of up to 4 hops, the depth-capped contract
     graph_bfs also uses).
 
-    Scale shape: per round, ONE join of the frontier-distance table
-    (O(nodes)) against the adjacency on s1 + a min re-agg — state lives
-    distributed, the driver loops over PLANS only, and localCheckpoint
-    truncates lineage per round exactly as bfs/connected_components do."""
+    Scale shape: per round, ONE join of the changed-distance frontier
+    (O(nodes)) against the adjacency on s1 + a min re-agg (min_relax) —
+    state lives distributed, the driver loops over PLANS only, and a lazy
+    pin truncates lineage per round."""
     li = load(spark, sf_dir, "lineitem")
-    # weight is a pure function of (s1, s2), so it layers on the shared
-    # adjacency after the checkpoint
-    adj = coship_adj(li, checkpoint=True).withColumn(
-        "w", 1 + (F.col("s1") * 7 + F.col("s2") * 13) % 5
+    d = spark.createDataFrame([(_START, 0)], "s long, dist long")
+    d, _ = min_relax(
+        d,
+        coship_adj(li, checkpoint=True),
+        ["s"],
+        1 + (F.col("s1") * 7 + F.col("s2") * 13) % 5,
+        4,
+        broadcast=True,
     )
-    d = spark.createDataFrame([( _START, 0)], "s long, dist long")
-    for _ in range(4):
-        # r14 (guide §3.1/§2.4): broadcast the O(|V|)-row distance state —
-        # un-hinted, the planner sort-merge-joined state with the pinned
-        # adjacency, re-exchanging AND re-sorting the full |E|-row edge
-        # list every round (plans/r14/graph_sssp_weighted_before.txt nodes
-        # 4/9/11); the broadcast relax join leaves the edge list where it
-        # sits. State is 16 B/row (two longs): ~16 MB per million
-        # suppliers, comfortably under broadcast limits at any plausible
-        # |V|, and it is a pinned RDD, so the BroadcastExchange does not
-        # drag iteration lineage (the r13 markov lesson).
-        relaxed = F.broadcast(d).join(adj, d.s == adj.s1).select(
-            F.col("s2").alias("s"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        # r14 early exit (the connected_components changed-count device):
-        # Bellman-Ford distances are monotone non-increasing, so a round
-        # that improves nothing makes every later round the identity —
-        # running it would re-relax the full |E| edge rows for no change.
-        # The candidate min and the key's own previous distance come out
-        # of ONE aggregation (newly reached keys count as changed via the
-        # NULL own-distance), and the changed-count is the round's pin-
-        # materializing action, so no extra pass is added.
-        nxt = pin(
-            d.withColumn("_own", F.lit(True))
-            .unionByName(relaxed.withColumn("_own", F.lit(False)))
-            .groupBy("s")
-            .agg(
-                F.min("dist").alias("dist"),
-                F.min(F.when(F.col("_own"), F.col("dist"))).alias("_prev"),
-            ),
-            eager=False,
-        )
-        changed = (
-            nxt.where(F.col("_prev").isNull() | (F.col("dist") < F.col("_prev")))
-            .limit(1)
-            .count()
-        )
-        d = nxt.select("s", "dist")
-        if changed == 0:
-            break
     return d.select(
         F.col("s").alias("suppkey"), F.col("dist").cast("bigint").alias("dist")
     )
@@ -1542,45 +1483,6 @@ def _landmark_oracle(final_select: str | None = None) -> str:
     return "".join(parts)
 
 
-def _lm_relax(d: DataFrame, adj: DataFrame) -> DataFrame:
-    """One landmark-BFS relaxation round: min(own distance ∪ neighbor
-    distances + 1) per (landmark, node), plus the fused changed flag.
-    Module-level so tools/probe_relax_plans.py dumps the EXACT executed
-    round plan as before/after evidence (the loop hides it behind pins).
-
-    r14 (the graph_sssp_weighted device, guide §3.1/§2.4): broadcast the
-    O(|landmarks|·|V|)-row pinned state — un-hinted, the planner
-    sort-merge-joined state with the pinned adjacency, re-exchanging AND
-    re-sorting the full |E|-row edge list every round (the state side is an
-    ExistingRDD, so its stats never clear the auto-broadcast threshold).
-    State is 24 B/row × 4 landmarks: ~96 MB per million suppliers, under
-    broadcast limits at any plausible |V|; it is pinned per round, so the
-    BroadcastExchange drags no iteration lineage, and the loop already
-    pays per-round pins — exactly the posture where the sssp A/B won 1.9×
-    (vs pagerank, whose fused loop rejected the transplant). min() is
-    order-independent, so the result is bit-identical."""
-    relaxed = F.broadcast(d).join(adj, d.s == adj.s1).select(
-        "lm", F.col("s2").alias("s"), (F.col("dist") + 1).alias("dist")
-    )
-    return (
-        d.withColumn("own", F.lit(True))
-        .unionByName(relaxed.withColumn("own", F.lit(False)))
-        .groupBy("lm", "s")
-        .agg(
-            F.min("dist").alias("dist"),
-            F.min(F.when(F.col("own"), F.col("dist"))).alias("own_d"),
-        )
-        .select(
-            "lm",
-            "s",
-            "dist",
-            (
-                F.col("own_d").isNull() | (F.col("dist") < F.col("own_d"))
-            ).alias("changed"),
-        )
-    )
-
-
 @query(
     "graph_landmark_distances",
     oracle=_landmark_oracle(),
@@ -1603,29 +1505,17 @@ def graph_landmark_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     one equi-join of the O(|landmarks|·|nodes|) state against the
     checkpointed adjacency on s1 plus a min re-agg; the composite key
     multiplies state rows by |landmarks| (4), never the edge pass
-    count. The driver loop runs over PLANS only."""
+    count. The driver loop runs over PLANS only; min_relax stops at the
+    first round that changes nothing (on the dense co-ship graph every
+    node is ~1 hop from every landmark)."""
     li = load(spark, sf_dir, "lineitem")
-    adj = coship_adj(li, checkpoint=True)
     d = spark.createDataFrame(
         [(x, x, 0) for x in _LANDMARKS], "lm long, s long, dist long"
     )
-    for _ in range(_LM_ROUNDS):
-        # Fused changed-test + early exit (r14, the connected_components
-        # device): hop distances never improve once set (first reach is
-        # shortest under synchronous relaxation), so a round that changes
-        # nothing makes every later round the identity — min(d ∪ relaxed)
-        # = d from then on. One aggregation computes the new minimum AND
-        # the key's previous distance (min over the single own row; NULL
-        # for newly reached keys), the changed-count doubles as the round
-        # pin's materializing action, and the loop exits as soon as a
-        # round is a no-op. On the dense co-ship graph every node is ~1
-        # hop from every landmark, so 1 of the 3 declared rounds does the
-        # work and the other two relaxed ~4M state⋈edge rows for nothing.
-        nxt = _lm_relax(d, adj).transform(pin, eager=False)
-        changed = nxt.where("changed").limit(1).count()
-        d = nxt.drop("changed")
-        if changed == 0:
-            break
+    d, _ = min_relax(
+        d, coship_adj(li, checkpoint=True), ["lm", "s"], F.lit(1), _LM_ROUNDS,
+        broadcast=True,
+    )
     return d.select(
         F.col("lm").alias("landmark"),
         F.col("s").alias("suppkey"),
@@ -2254,9 +2144,9 @@ def graph_diameter_doublesweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the honest spelling of 'eccentricity at most D').
 
     Scale shape: exactly two frontier-BFS runs over the ONE pinned
-    adjacency (bfs_frontier; per level one join + distinct + anti-join,
-    state O(nodes)); the sweep-2 seed is the TakeOrdered 1-row plan, so
-    the choice of u never touches the driver."""
+    adjacency (min_relax with unit weights; per level one join + min
+    re-agg, state O(nodes)); the sweep-2 seed is the TakeOrdered 1-row
+    plan, so the choice of u never touches the driver."""
     li = load(spark, sf_dir, "lineitem")
     adj = pin_invariant(coship_adj(li, exclude_self=False))
     lev1 = bfs(spark, adj, _START, _DS_DEPTH)
@@ -2272,7 +2162,9 @@ def graph_diameter_doublesweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     start2 = pick.select(
         F.col("u").alias("suppkey"), F.lit(0).cast("int").alias("depth")
     )
-    lev2 = bfs_frontier(adj, start2, _DS_DEPTH)
+    lev2, _ = min_relax(
+        start2, adj, ["suppkey"], F.lit(1), _DS_DEPTH, broadcast=True
+    )
     agg2 = lev2.agg(
         F.max("depth").cast("int").alias("diameter_lb"),
         F.count(F.lit(1)).cast("bigint").alias("n_reached"),
@@ -2338,9 +2230,8 @@ def _hits_contrib(
     edges: DataFrame, score: DataFrame, key: str, other: str, val: str
 ) -> DataFrame:
     """One HITS half-step contribution: ship the score vector across the
-    bipartite edges and dsum it on the other side's key. Module-level so
-    tools/probe_relax_plans.py dumps the EXACT executed half-step plan as
-    before/after evidence (the loop hides it behind pins)."""
+    bipartite edges and dsum it on the other side's key (both half-steps
+    of every iteration)."""
     from ksql_spark.registry import dsum
 
     return edges.join(score, key).groupBy(other).agg(dsum(val).alias("c"))

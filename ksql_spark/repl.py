@@ -15,8 +15,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-from ksql_spark.compat.rewriter import (Rewriter, compat_qualify, compat_top,
-                                         compat_using)
+from ksql_spark.compat.rewriter import Rewriter, compat_sql
 
 
 def resolve_live_client(live: bool, kubeconfig: str | None):
@@ -182,7 +181,7 @@ def handle_line(spark, rewriter: Rewriter, line: str) -> None:
             if not sql:
                 print("usage: .explain [analyze] <query>")
                 return
-            df = spark.sql(rewriter.rewrite(sql))
+            df = spark.sql(compat_sql(rewriter, sql))
             if analyze:
                 df.write.mode("overwrite").format("noop").save()
                 plan = df._jdf.queryExecution().executedPlan().toString()
@@ -219,11 +218,7 @@ def handle_line(spark, rewriter: Rewriter, line: str) -> None:
                     "add OVERWRITE to the options to replace it, e.g. "
                     "(SHARD BY k, OVERWRITE)"
                 )
-            src_df = spark.sql(
-                compat_qualify(
-                    compat_top(compat_using(rewriter.rewrite(source_sql)))
-                )
-            )
+            src_df = spark.sql(compat_sql(rewriter, source_sql))
             if spec["mode"] == "shard":
                 layout.write_sharded(
                     src_df, out_path, key_col=spec["key"],
@@ -287,8 +282,7 @@ def handle_line(spark, rewriter: Rewriter, line: str) -> None:
                     src = reader.parquet(src_path)
                 src.createOrReplaceTempView(view)
                 created.append(view)
-            sql = compat_qualify(compat_top(compat_using(rewriter.rewrite(line))))
-            df = spark.sql(sql)
+            df = spark.sql(compat_sql(rewriter, line))
             if fmt:
                 if fmt == "xlsx":
                     # single-sheet interchange file: collected on the driver

@@ -1216,47 +1216,38 @@ def test_landmark_bfs_state_joins_are_keyed(spark):
 
 
 def test_relax_rounds_broadcast_pinned_state(spark):
-    """r14 session 2 (the graph_sssp_weighted device fanned out): one
-    landmark relax round and one BFS level — rebuilt over pinned inputs,
-    exactly what the loops execute — must broadcast the O(|V|)-row state
-    side instead of sort-merge-joining it (which re-exchanged AND
-    re-sorted the |E|-row pinned edge list every round; ExistingRDD stats
-    never clear the auto-broadcast threshold, so this requires the
-    explicit hint the fix added)."""
+    """One min_relax round over pinned inputs (pins stubbed to identity
+    inside the loop, so the returned state exposes the round plan) must
+    broadcast the pinned frontier when the caller asks for it: ExistingRDD
+    stats never clear the auto-broadcast threshold, and the un-hinted
+    sort-merge join re-exchanged AND re-sorted the |E|-row pinned edge list
+    every round. Connected components' broadcast=False keeps the shuffled
+    join."""
     from pyspark.sql import functions as F
 
-    from ksql_spark.operators.scale import pin
-    from ksql_spark.queries.graph import (
-        _LANDMARKS,
-        _bfs_level,
-        _lm_relax,
-        coship_adj,
-    )
-    from ksql_spark.tables import load
+    from ksql_spark.operators.scale import pin, pins_disabled
+    from ksql_spark.queries.graph import min_relax
 
-    li = load(spark, SF_DIR, "lineitem")
-    adj = coship_adj(li, checkpoint=True)
-    d = spark.createDataFrame(
-        [(x, x, 0) for x in _LANDMARKS], "lm long, s long, dist long"
+    edges = [(i, i + 1) for i in range(5)] + [(i + 1, i) for i in range(5)]
+    adj = pin(spark.createDataFrame(edges, "s1 long, s2 long"), eager=False)
+    seeds = pin(
+        spark.createDataFrame(
+            [(0, 0, 0), (1, 1, 0)], "lm long, s long, dist long"
+        ),
+        eager=False,
     )
-    d1 = pin(_lm_relax(d, adj).drop("changed"), eager=False)
-    round_plan = (
-        _lm_relax(d1, adj)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in round_plan
-    assert "SortMergeJoin" not in round_plan
 
-    adj_b = pin(coship_adj(li, exclude_self=False), eager=False)
-    seed = spark.createDataFrame([(0, 0)], "suppkey long, depth int")
-    f1 = pin(_bfs_level(seed, seed, adj_b, 1), eager=False)
-    level_plan = (
-        _bfs_level(f1, seed.unionByName(f1), adj_b, 2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert level_plan.count("BroadcastHashJoin") >= 2  # inner + anti
-    assert "SortMergeJoin" not in level_plan
+    def round_plan(broadcast):
+        with pins_disabled():
+            state, _ = min_relax(
+                seeds, adj, ["lm", "s"], F.lit(1), 1, broadcast=broadcast
+            )
+        return state._jdf.queryExecution().executedPlan().toString()
+
+    plan = round_plan(True)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" not in round_plan(False)
 
 
 def test_stl_windows_calendar_bounded(spark):

@@ -267,9 +267,12 @@ def test_file_source_views_are_dropped(spark, rw, tmp_path, capsys):
 def test_handle_line_explain_command(spark, rw, capsys):
     """.explain prints the formatted physical plan (through the compat
     rewrite) instead of executing the query."""
-    handle_line(spark, rw, ".explain select count(*) from containers")
-    out = capsys.readouterr().out
-    assert "Physical Plan" in out
+    for stmt in (
+        "select count(*) from containers",
+        "select top 3 image from containers",
+    ):
+        handle_line(spark, rw, f".explain {stmt}")
+        assert "Physical Plan" in capsys.readouterr().out, stmt
     handle_line(spark, rw, ".explain")
     assert "usage: .explain" in capsys.readouterr().out
 

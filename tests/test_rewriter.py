@@ -81,6 +81,16 @@ def test_bare_column_resolution():
         RW.rewrite("select metadata->name from pods")
         == "select metadata.name from pods"
     )
+    # pods, nodes and services all have `metadata`: a bare root resolves
+    # against the views the statement names after FROM/JOIN (AlaSQL's
+    # scoping), and stays ambiguous — passed through — when several do
+    rw3 = Rewriter({"pods": PODS, "nodes": PODS, "services": PODS})
+    assert (
+        rw3.rewrite("select metadata->name from pods")
+        == "select metadata.name from pods"
+    )
+    sql = "select metadata->name from pods join nodes on pods.uid = nodes.uid"
+    assert rw3.rewrite(sql) == sql
 
 
 def test_array_index_then_field():
