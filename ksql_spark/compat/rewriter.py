@@ -111,7 +111,10 @@ class Rewriter:
         if len(hits) == 1:
             return ".".join(path), next(iter(hits.values()))
         if len(hits) > 1:
-            raise RewriteError(f"ambiguous column path {'.'.join(path)!r}")
+            raise RewriteError(
+                f"ambiguous column path {'.'.join(path)!r}: qualify it with "
+                f"one of {', '.join(sorted(hits))}"
+            )
         # unknown first id → treat it as a table ALIAS: resolve the rest of the
         # path, keep the alias prefix verbatim (`p.metadata->name` with p an
         # alias of pods ⇒ p.metadata.name). Multiple views may share the field
@@ -150,14 +153,16 @@ class Rewriter:
 
     def _rewrite_chain(
         self, base_path: list[str], segments: list, scope: frozenset[str]
-    ) -> tuple[str, DataType]:
-        """segments: list of ("key", name) | ("index", int)."""
+    ) -> tuple[str, DataType] | None:
+        """segments: list of ("key", name) | ("index", int).
+
+        None when the base path is no column of any registered view (e.g.
+        the parameter of a Spark SQL lambda `x -> x*2`). Once it is one, a
+        chain that cannot be rewritten raises: passed through, Spark would
+        parse its `->` as a lambda."""
         resolved = self._base_type(base_path, scope)
         if resolved is None:
-            raise RewriteError(
-                f"cannot resolve {'.'.join(base_path)!r} against registered views "
-                f"({', '.join(sorted(self.schemas)) or 'none'})"
-            )
+            return None
         expr, dt = resolved
         i = 0
         while i < len(segments):
@@ -252,14 +257,14 @@ class Rewriter:
                             f"expected identifier or (index) after -> near token {k}"
                         )
                     k = peek_nonws(k_next)
-                try:
-                    expr, dt = self._rewrite_chain(path, segments, scope)
-                except RewriteError:
-                    # not a data path we know (e.g. a Spark SQL lambda `x -> x*2`,
-                    # or a typo the engine will diagnose) → pass through verbatim
+                rewritten = self._rewrite_chain(path, segments, scope)
+                if rewritten is None:
+                    # not a data path we know (a lambda, or a typo the engine
+                    # will diagnose) → pass through verbatim
                     out.append("".join(t2.text for t2 in toks[span_start:k_next]))
                     i = k_next
                     continue
+                expr, dt = rewritten
                 if self.truthiness_compat and isinstance(dt, StringType):
                     # only when the chain is the WHOLE boolean operand — a
                     # following comparison operator means NOT governs the larger

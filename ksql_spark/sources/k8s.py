@@ -17,12 +17,22 @@ Modes:
 The derived `containers` view (one row per container per pod, parent uid
 carried — ksql.js:197-213) is containers_view(); it fixes the reference's
 missing-restartCount bug with coalesce(restartCount, 0) (SURVEY §1.4).
+
+register_k8s_views() makes the four views a point-in-time snapshot, as the
+reference's in-memory tables are (ksql.js:249-257; SURVEY §1.1): one list call
+per kind per refresh, held as a cached in-JVM relation that the first query
+fills, with `containers` derived from the cached pods. Statements then read
+the cache — no Python worker, no re-read of the fixture or the API server —
+and a pods⋈containers join sees one pods list. Re-registering (the periodic
+refresh) drops the previous snapshot. Direct load_k8s() reads stay live.
 """
 
 from __future__ import annotations
 
 import json
+import os
 from datetime import datetime, timezone
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -455,7 +465,18 @@ def containers_view(pods: DataFrame) -> DataFrame:
 
 
 def register(spark: SparkSession) -> None:
-    """Register the DataSource class with the session (idempotent)."""
+    """Register the DataSource class with the session (idempotent).
+
+    Spark's Python workers import this module to plan and read the source,
+    and their environment is captured when the source is registered. So the
+    package's parent directory is added to their PYTHONPATH first (a value
+    already set is kept); without it a session started outside the
+    repository fails with `No module named 'ksql_spark'`."""
+    env = spark.sparkContext.environment
+    root = str(Path(__file__).resolve().parents[2])
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [root])
     try:
         spark.dataSource.register(K8sDataSource)
     except Exception as exc:
@@ -476,7 +497,9 @@ def load_k8s(spark: SparkSession, kind: str, fixtures: str | None = None,
     import base64
 
     register(spark)
-    r = spark.read.format("k8s").option("kind", kind)
+    # an explicit schema spares load() the Python round trip that would
+    # otherwise ask the DataSource for it
+    r = spark.read.format("k8s").schema(SCHEMAS[kind]).option("kind", kind)
     if fixtures:
         r = r.option("fixtures", fixtures)
     if label_selector:
@@ -506,13 +529,21 @@ def register_k8s_views(spark: SparkSession, fixtures: str | None = None,
                        server: str | None = None, token: str | None = None,
                        client=None) -> None:
     """Create the reference's four tables as temp views (ksql.js:128-135):
-    pods, nodes, services + the derived containers."""
-    pods = load_k8s(spark, "pods", fixtures, server, token, client)
-    pods.createOrReplaceTempView("pods")
-    load_k8s(spark, "nodes", fixtures, server, token, client).createOrReplaceTempView(
-        "nodes"
-    )
-    load_k8s(spark, "services", fixtures, server, token, client).createOrReplaceTempView(
-        "services"
-    )
-    containers_view(pods).createOrReplaceTempView("containers")
+    pods, nodes, services + the derived containers — one snapshot.
+
+    Each kind is read once per call: the DataSource relation is cached and
+    filled by the first query that touches it (filling here would plan the
+    Python scan at set-up), and `containers` derives from the cached pods.
+    The previous call's snapshot is unpersisted without blocking, so a query
+    still running on it recomputes from the source instead of failing."""
+    for kind in SCHEMAS:
+        if spark.catalog.tableExists(kind):
+            spark.table(kind).unpersist(blocking=False)
+    snap = {
+        kind: load_k8s(spark, kind, fixtures, server, token, client).cache()
+        for kind in SCHEMAS
+    }
+    for kind, df in snap.items():
+        df.createOrReplaceTempView(kind)
+    containers_view(snap["pods"]).createOrReplaceTempView("containers")
+

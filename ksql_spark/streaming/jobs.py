@@ -296,8 +296,9 @@ def snapshot_refresh(spark: SparkSession, interval: str = "10 seconds",
                      fixtures: str | None = None, client=None):
     """I8: periodic snapshot refresh — the reference schedules ONE reload after
     10 s in TTY mode (ksql.js:280, intent periodic; SURVEY §1.1). Here a rate
-    source ticks and foreachBatch re-registers the k8s views atomically.
-    `client` (kubeconfig.ClientConfig) must be forwarded in live mode —
+    source ticks and foreachBatch swaps snapshots: register_k8s_views points
+    the k8s views at a new cached snapshot, which the next query fills with
+    one list call per kind, and drops the previous one. `client` (kubeconfig.ClientConfig) must be forwarded in live mode —
     otherwise the refresh would silently swap live views back to fixtures.
     Returns the StreamingQuery (caller stops it)."""
     from ksql_spark.sources.k8s import register_k8s_views

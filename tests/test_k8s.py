@@ -8,7 +8,11 @@ test with no shared code path.
 
 from __future__ import annotations
 
+import collections
+import contextlib
 import json
+import os
+import pathlib
 
 import pytest
 
@@ -176,11 +180,10 @@ def test_view_reuse_not_poisoned_by_filtered_query(spark):
     assert spark.sql("select count(*) c from pods").collect()[0].c == total
 
 
-def test_live_mode_sends_selectors(spark):
-    """End-to-end: selector OPTIONS must reach the API server as query params
-    (exercises __init__ option parsing AND _items' URL assembly against a real
-    HTTP stub — the server does the filtering in live mode)."""
-    import json as _json
+@contextlib.contextmanager
+def _api_server(fixture_dir):
+    """A stub API server that serves the fixture JSON lists and records the
+    path of every GET."""
     import threading
     from http.server import BaseHTTPRequestHandler, HTTPServer
 
@@ -192,23 +195,116 @@ def test_live_mode_sends_selectors(spark):
 
         def do_GET(self):  # noqa: N802
             seen.append(self.path)
+            kind = self.path.split("?")[0].rsplit("/", 1)[-1]
+            body = (pathlib.Path(fixture_dir) / f"{kind}.json").read_bytes()
             self.send_response(200)
             self.end_headers()
-            self.wfile.write(_json.dumps({"items": []}).encode())
+            self.wfile.write(body)
 
     httpd = HTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=httpd.serve_forever, daemon=True).start()
     try:
-        from ksql_spark.sources.k8s import load_k8s
+        yield f"http://127.0.0.1:{httpd.server_address[1]}", seen
+    finally:
+        httpd.shutdown()
 
-        url = f"http://127.0.0.1:{httpd.server_address[1]}"
+
+def test_live_mode_sends_selectors(spark):
+    """End-to-end: selector OPTIONS must reach the API server as query params
+    (exercises __init__ option parsing AND _items' URL assembly against a real
+    HTTP stub — the server does the filtering in live mode)."""
+    from ksql_spark.sources.k8s import load_k8s
+
+    with _api_server(ensure_fixtures()) as (url, seen):
         load_k8s(spark, "pods", server=url, label_selector="tier=web",
                  field_selector="spec.nodeName!=node-0").collect()
         assert len(seen) == 1
         assert "labelSelector=tier%3Dweb" in seen[0]
         assert "fieldSelector=spec.nodeName%21%3Dnode-0" in seen[0]
+
+
+def _gets_per_kind(seen):
+    return collections.Counter(p.split("?")[0].rsplit("/", 1)[-1] for p in seen)
+
+
+def _count(spark, sql):
+    return spark.sql(sql).collect()[0][0]
+
+
+_JOIN = "select count(*) from pods p join containers c on p.uid = c.uid"
+
+
+def test_snapshot_one_list_call_per_kind_per_refresh(spark):
+    """The views are one snapshot: every statement — containers and the
+    pods⋈containers join included — reads the one pods list, and a refresh
+    makes exactly one new list call per kind that is read."""
+    try:
+        with _api_server(ensure_fixtures()) as (url, seen):
+            register_k8s_views(spark, server=url)
+            assert _count(spark, "select count(*) from pods") == 20
+            assert _count(spark, "select count(*) from containers") == 39
+            assert _count(spark, _JOIN) == 39
+            assert _count(spark, "select count(*) from nodes") == 3
+            assert _count(spark, "select count(*) from services") == 5
+            assert _count(spark, "select count(*) from pods") == 20
+            assert _gets_per_kind(seen) == {"pods": 1, "nodes": 1, "services": 1}
+
+            register_k8s_views(spark, server=url)
+            assert _count(spark, _JOIN) == 39
+            assert _count(spark, "select count(*) from pods") == 20
+            assert _count(spark, "select count(*) from nodes") == 3
+            assert _gets_per_kind(seen) == {"pods": 2, "nodes": 2, "services": 1}
     finally:
-        httpd.shutdown()
+        register_k8s_views(spark)
+
+
+def test_snapshot_refresh_swaps_and_drops_old(spark, tmp_path):
+    """A snapshot does not see the source change; re-registering does, and
+    leaves the previous snapshot uncached."""
+    from pyspark import StorageLevel
+
+    ensure_fixtures(tmp_path)
+    try:
+        register_k8s_views(spark, fixtures=str(tmp_path))
+        assert _count(spark, "select count(*) from pods") == 20
+        assert _count(spark, "select count(*) from containers") == 39
+        doc = json.loads((tmp_path / "pods.json").read_text())
+        doc["items"] = doc["items"][:5]
+        (tmp_path / "pods.json").write_text(json.dumps(doc))
+        assert _count(spark, "select count(*) from pods") == 20
+        old = spark.table("pods")
+        assert old.storageLevel != StorageLevel.NONE
+
+        register_k8s_views(spark, fixtures=str(tmp_path))
+        assert _count(spark, "select count(*) from pods") == 5
+        n_containers = sum(len(p["spec"]["containers"]) for p in doc["items"])
+        assert _count(spark, "select count(*) from containers") == n_containers
+        assert old.storageLevel == StorageLevel.NONE
+    finally:
+        register_k8s_views(spark)
+
+
+def test_register_puts_package_on_worker_pythonpath(spark):
+    """Spark's Python workers must import the DataSource's module without an
+    external PYTHONPATH; a value already set is kept."""
+    import ksql_spark
+    from ksql_spark.sources.k8s import register
+
+    env = spark.sparkContext.environment
+    before = env.get("PYTHONPATH")
+    root = str(pathlib.Path(ksql_spark.__file__).resolve().parents[1])
+    try:
+        env["PYTHONPATH"] = "vendor"
+        register(spark)
+        assert env["PYTHONPATH"].split(os.pathsep) == ["vendor", root]
+        register(spark)
+        assert env["PYTHONPATH"].split(os.pathsep) == ["vendor", root]
+    finally:
+        if before is None:
+            env.pop("PYTHONPATH", None)
+        else:
+            env["PYTHONPATH"] = before
+        register(spark)
 
 
 def test_field_selector_not_equals_fixture_mode(spark):

@@ -5,11 +5,13 @@ from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, MapType, StringType, StructField, StructType
 
-from ksql_spark.compat.rewriter import Rewriter
+from ksql_spark.compat.rewriter import RewriteError, Rewriter
+from ksql_spark.sources.k8s import SCHEMAS
 
 RW = Rewriter({"t": StructType([StructField("x", StringType())])})
+K8S_RW = Rewriter(SCHEMAS)
 
 sql_text = st.text(
     alphabet=st.characters(
@@ -25,6 +27,59 @@ def test_rewriter_identity_without_arrow(sql):
     """Any text with no `->` token must round-trip unchanged."""
     assert "->" not in sql
     assert RW.rewrite(sql) == sql
+
+
+def _field_names(dt) -> set[str]:
+    if isinstance(dt, StructType):
+        return {f.name for f in dt.fields}.union(
+            *(_field_names(f.dataType) for f in dt.fields)
+        )
+    if isinstance(dt, (ArrayType, MapType)):
+        return _field_names(dt.valueType if isinstance(dt, MapType) else dt.elementType)
+    return set()
+
+
+_K8S_KEYS = sorted(set().union(*map(_field_names, SCHEMAS.values())) | {"email", "nosuch"})
+
+
+@st.composite
+def k8s_arrow_statements(draw):
+    """`select <base>-><segments> from v1 [join v2 …]` over the k8s views:
+    the base is a column path of one view, bare or view-qualified, and the
+    segments are keys, string keys and indexes that may or may not fit."""
+    views = draw(st.lists(st.sampled_from(sorted(SCHEMAS)), min_size=1,
+                          max_size=3, unique=True))
+    owner = draw(st.sampled_from(sorted(SCHEMAS)))
+    dt, base = SCHEMAS[owner], []
+    while isinstance(dt, StructType) and (not base or draw(st.booleans())):
+        field = draw(st.sampled_from(dt.fields))
+        base.append(field.name)
+        dt = field.dataType
+    if draw(st.booleans()):
+        base.insert(0, owner)
+    segments = draw(st.lists(
+        st.one_of(
+            st.sampled_from(_K8S_KEYS),
+            st.sampled_from(_K8S_KEYS).map(lambda k: f"('{k}')"),
+            st.integers(0, 3).map(lambda i: f"({i})"),
+        ),
+        min_size=1, max_size=4,
+    ))
+    chain = "->".join([".".join(base), *segments])
+    return f"select {chain} from " + " join ".join(views)
+
+
+@given(k8s_arrow_statements())
+@settings(max_examples=300, deadline=None)
+def test_k8s_arrow_chain_rewrites_or_raises(sql):
+    """A `->` chain rooted at a k8s view's column either rewrites completely
+    or raises RewriteError: no `->` reaches Spark, which would parse it as a
+    lambda."""
+    try:
+        out = K8S_RW.rewrite(sql)
+    except RewriteError:
+        return
+    assert "->" not in out, (sql, out)
 
 
 rows = st.lists(

@@ -21,6 +21,7 @@ from ksql_spark.compat.rewriter import (
     compat_top,
     compat_using,
 )
+from ksql_spark.sources.k8s import SCHEMAS
 
 PODS = StructType(
     [
@@ -83,14 +84,23 @@ def test_bare_column_resolution():
     )
     # pods, nodes and services all have `metadata`: a bare root resolves
     # against the views the statement names after FROM/JOIN (AlaSQL's
-    # scoping), and stays ambiguous — passed through — when several do
+    # scoping), and is an error when several do — passed through, Spark
+    # would parse the `->` as a lambda
     rw3 = Rewriter({"pods": PODS, "nodes": PODS, "services": PODS})
     assert (
         rw3.rewrite("select metadata->name from pods")
         == "select metadata.name from pods"
     )
     sql = "select metadata->name from pods join nodes on pods.uid = nodes.uid"
-    assert rw3.rewrite(sql) == sql
+    with pytest.raises(RewriteError, match="ambiguous column path 'metadata'"):
+        rw3.rewrite(sql)
+    k8s = Rewriter(SCHEMAS)
+    with pytest.raises(RewriteError, match="nodes, pods"):
+        k8s.rewrite(
+            "select metadata->name from pods join nodes on pods.node = nodes.name"
+        )
+    lam = "select transform(array(1,2), x -> x + 1) from pods join nodes"
+    assert k8s.rewrite(lam) == lam
 
 
 def test_array_index_then_field():

@@ -5,6 +5,7 @@ table is replayed as a file stream.
 
 from __future__ import annotations
 
+import json
 import shutil
 import time
 from pathlib import Path
@@ -235,24 +236,39 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert emissions == [1], emissions
 
 
-def test_snapshot_refresh_ticks(spark):
+def test_snapshot_refresh_ticks(spark, tmp_path):
+    """A tick swaps in a new snapshot: after the fixture changes, the pods
+    view follows within a few ticks (the views are a private copy, so only
+    this query's ticks can produce 5 pods)."""
     from ksql_spark.sources.fixtures import ensure_fixtures
+    from ksql_spark.sources.k8s import register_k8s_views
 
-    ensure_fixtures()
-    q = jobs.snapshot_refresh(spark, interval="1 seconds")
-    try:
+    ensure_fixtures(tmp_path)
+    q = jobs.snapshot_refresh(spark, interval="1 seconds", fixtures=str(tmp_path))
+
+    def wait_for(pods):
         deadline = time.time() + 30
         while time.time() < deadline:
             try:
-                if spark.table("pods").count() == 20:
-                    break
+                if spark.table("pods").count() == pods:
+                    return
             except Exception:
                 pass
             time.sleep(0.5)
-        else:
-            pytest.fail("refresh never registered the pods view")
+        pytest.fail(f"refresh never showed {pods} pods")
+
+    try:
+        deadline = time.time() + 30
+        while q.lastProgress is None and time.time() < deadline:
+            time.sleep(0.2)
+        wait_for(20)
+        doc = json.loads((tmp_path / "pods.json").read_text())
+        doc["items"] = doc["items"][:5]
+        (tmp_path / "pods.json").write_text(json.dumps(doc))
+        wait_for(5)
     finally:
         q.stop()
+        register_k8s_views(spark)
 
 
 def _has_protobuf() -> bool:
